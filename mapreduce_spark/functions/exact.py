@@ -33,15 +33,3 @@ def dsum_expr(expr: str, alias: str) -> Column:
     """Exact sum over a decimal-typed SQL expression (joins/products)."""
     return F.expr(f"CAST(SUM({expr}) AS DOUBLE)").alias(alias)
 
-
-# SQL-side fragments (kept next to the Spark builders so the two stay in sync)
-def sql_dsum(col: str, alias: str, scale: int = 2) -> str:
-    """DuckDB fragment mirroring dsum()."""
-    return f"CAST(SUM(CAST({col} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
-
-
-def sql_davg(col: str, alias: str, scale: int = 2) -> str:
-    """DuckDB fragment mirroring davg()."""
-    return (
-        f"CAST(SUM(CAST({col} AS DECIMAL(18,{scale}))) AS DOUBLE) / COUNT({col}) AS {alias}"
-    )

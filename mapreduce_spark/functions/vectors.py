@@ -68,42 +68,6 @@ def hyperplane(table: int, plane: int, dim: int = EMB_DIM) -> list[float]:
     return out
 
 
-def spark_dot_literal_sql(vec_col: str, plane: list[float]) -> str:
-    """Spark-SQL dot product against a literal plane as ONE parseable
-    expression string — the identical aggregate/zip_with fold as
-    dot_literal(), but built by a single expr parse instead of 64 Py4J
-    literal round-trips per plane (which cost ~17 s of plan construction
-    at the production geometry's 256 planes). The fold form is kept over
-    a fully-unrolled sum on purpose: unrolling to 16k-node trees per
-    bucket column OOMed Catalyst's optimizer when the bucket subtree
-    appears on both sides of the candidate self-join."""
-    lits = ", ".join(f"{w!r}D" for w in plane)
-    return (
-        f"aggregate(zip_with({vec_col}, array({lits}), "
-        f"(x, y) -> CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
-        f"(acc, v) -> acc + v)"
-    )
-
-
-def duck_plane_literal(plane: list[float]) -> str:
-    """DuckDB DOUBLE[] literal for a plane (decimal literals promote to
-    the nearest double — bit-identical to Python's float, verified)."""
-    return "[" + ", ".join(repr(x) for x in plane) + "]::DOUBLE[]"
-
-
-def duck_dot_col_sql(vec_col: str, w_col: str, dim: int = EMB_DIM) -> str:
-    """DuckDB dot of a vector column against a DOUBLE[] COLUMN — the
-    same sequential fold as sql_dot_literal, but the plane must be
-    hoisted into a column (one-row CTE) first: a plane spelled as a
-    list literal INSIDE the lambda is re-materialized per element,
-    which turned each 64-dim dot into 4096 allocations (~100x slower,
-    measured) at the production bucket geometry's 256 planes."""
-    return (
-        f"list_aggregate(list_transform(range(1, {dim + 1}), "
-        f"i -> CAST({vec_col}[i] AS DOUBLE) * {w_col}[i]), 'sum')"
-    )
-
-
 # --- DuckDB SQL mirrors -----------------------------------------------------
 
 def sql_dot_pair(a: str, b: str, dim: int = EMB_DIM) -> str:

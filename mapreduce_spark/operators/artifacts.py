@@ -20,7 +20,7 @@ bench rep and every driver grading call re-derives the artifact from the
 parquet inputs (the EAGER_BUILD discipline in bench.py times it per
 rep), so nothing persists across runs.
 
-Scale posture — TRAINED ARTIFACTS vs EDGE TABLES (VERDICT r12 #4):
+Scale posture — TRAINED ARTIFACTS vs EDGE TABLES:
 the default-on sites hold two classes of frame. (a) Trained artifacts
 (quantizer centroids, PQ books, probe sets, the LSH shingle-fingerprint
 table): rows ~ O(cells) or O(docs), kilobytes to a few MB per executor
@@ -45,15 +45,7 @@ by whichever frames the caller still references.
 
 from __future__ import annotations
 
-import os
-
-
-def _env_on(name: str) -> bool:
-    """Boolean env knob: unset / '' / '0' / 'false' / 'no' / 'off' mean
-    OFF (ADVICE r12: plain truthiness made '0' truthy)."""
-    return os.environ.get(name, "").strip().lower() not in (
-        "", "0", "false", "no", "off",
-    )
+from mapreduce_spark.session import env_on
 
 
 def run_concurrently(*thunks) -> list:
@@ -64,7 +56,7 @@ def run_concurrently(*thunks) -> list:
     FIFO, which is exactly the back-fill behavior wanted; results come
     back in argument order and exceptions propagate.
 
-    Threads are ``pyspark.InheritableThread`` (ADVICE r12): under the
+    Threads are ``pyspark.InheritableThread``: under the
     default pinned-thread mode a plain pool thread does NOT inherit the
     caller's JVM-thread-local properties, so job descriptions, job
     groups and scheduler pools set by the caller would not cover the
@@ -74,7 +66,7 @@ def run_concurrently(*thunks) -> list:
     the A/B measurement knob (and the conservative posture for
     memory-tight clusters, where two concurrent jobs' peak state may
     not co-reside)."""
-    if _env_on("SPARK_GRAFT_SERIAL_BUILD") or len(thunks) == 1:
+    if env_on("SPARK_GRAFT_SERIAL_BUILD") or len(thunks) == 1:
         return [t() for t in thunks]
     from pyspark import InheritableThread
 
@@ -104,7 +96,7 @@ def release_local_checkpoints(spark) -> int:
     """Unpersist every RDD the context still tracks and return how many
     were released. In this codebase the ONLY persisted RDDs are eager
     ``localCheckpoint``s (no .persist()/.cache() anywhere — grep-true),
-    so this is the artifact-lifecycle hook (VERDICT r12 #8): call it at
+    so this is the artifact-lifecycle hook: call it at
     a point where no live DataFrame still reads a checkpoint — e.g.
     between benchmark queries, after a query's last action — and the
     executor storage footprint returns to zero instead of accumulating
@@ -129,6 +121,6 @@ def materialize(df):
     same host weather). Values are identical either way; only the
     plan shape (one checkpointed run vs N in-plan re-derivations)
     changes, so the knob cannot affect the oracle gate."""
-    if _env_on("SPARK_GRAFT_NO_MATERIALIZE"):
+    if env_on("SPARK_GRAFT_NO_MATERIALIZE"):
         return df
     return df.localCheckpoint(eager=True)

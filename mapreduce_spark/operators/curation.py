@@ -1237,12 +1237,11 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_spark.operators.dedup import (
         N_BANDS,
         N_PERMS,
-        _doc_shingles,
+        _doc_shingle_hashes,
         minhash_lsh_pairs,
     )
 
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    pairs = minhash_lsh_pairs(sh, N_PERMS, N_BANDS)
+    pairs = minhash_lsh_pairs(_doc_shingle_hashes(spark, sf_dir), N_PERMS, N_BANDS)
     splits = train_test_split(spark, sf_dir).select("doc_id", "split")
     sa = splits.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")

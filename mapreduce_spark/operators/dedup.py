@@ -60,48 +60,54 @@ _SQL_SH_CTE = (
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Small corpora arrive as one parquet split; fan out so the CPU-heavy
-    # shingle+hash work uses every core (sources.tables.fan_out — the
-    # r13-shared guard; no-op at multi-file scale).
+    # shingle+hash work uses every core (no-op at multi-file scale).
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
     )
 
 
-def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored shingle-FINGERPRINT pass (guide §8, r13): one corpus
-    scan tokenizes, shingles and md5-hashes each document into
-    (doc_id, hs: array<bigint>) — hs[i] = md5_long(sgl[i]), the 60-bit
-    fingerprint per distinct shingle — materialized so the three plan
-    references every LSH tier makes (signature derivation + both
-    exact-verify sides) read the small int64 table instead of
-    re-running the tokenize/shingle/hash pass per reference and
-    shuffling fat string arrays through the verify joins (§2.3
-    "shuffle keys and metadata instead of payloads"; §3.3).
+def shingle_fingerprints(sh: DataFrame) -> DataFrame:
+    """(doc_id, hs: array<bigint>) from a (doc_id, sgl) distinct-shingle
+    frame: hs[i] = md5_long(sgl[i]), the 60-bit fingerprint per
+    shingle, same array order; empty documents are dropped (the
+    oracles' len(sgl) > 0). Lazy — _doc_shingle_hashes materializes it
+    for the corpus; planted-corpus callers use it directly."""
+    return sh.filter(F.size("sgl") > 0).select(
+        "doc_id", F.transform("sgl", md5_long).alias("hs")
+    )
 
-    Value preservation: signatures derive as hs % MINHASH_P — the exact
-    per-element arithmetic ``base_hashes`` applies, same array order —
-    and verify Jaccard over the hash sets equals string-shingle Jaccard
-    whenever md5_long is injective over the corpus's distinct shingles
-    (checked at every graded SF: 16506/16245/27213 distinct shingles at
-    sf0.001/0.01/0.1 map to exactly as many distinct 60-bit hashes; the
-    oracle gate re-verifies every consumer). At 1e11+ shingles the
-    60-bit birthday bound predicts a handful of collisions — the same
-    documented trade every md5_long fingerprint in this repo makes
-    (dedup_exact's content_fp); a collision only perturbs one pair's
-    verify Jaccard estimate, never drops a bucket.
+
+def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stored shingle-FINGERPRINT pass, the one shingle-set input of
+    every set-similarity consumer: one corpus scan tokenizes, shingles
+    and md5-hashes each document into (doc_id, hs) (shingle_fingerprints),
+    materialized so the several plan references a consumer makes
+    (signature derivation + both exact-verify sides) read the small
+    int64 table instead of re-running the tokenize/shingle/hash pass per
+    reference and shuffling fat string arrays through the verify joins.
+
+    Value preservation against the string-shingle oracles: signatures
+    derive as hs % MINHASH_P — the exact per-element arithmetic
+    ``base_hashes`` applies, same array order — and Jaccard over the
+    hash sets equals string-shingle Jaccard whenever md5_long is
+    injective over the corpus's distinct shingles (checked at every
+    graded SF: 16506/16245/27213 distinct shingles at sf0.001/0.01/0.1
+    map to exactly as many distinct 60-bit hashes; the oracle gate
+    re-verifies every consumer). At 1e11+ shingles the 60-bit birthday
+    bound predicts a handful of collisions — the same documented trade
+    every md5_long fingerprint in this repo makes (dedup_exact's
+    content_fp); a collision only perturbs one pair's verify Jaccard
+    estimate, never drops a bucket.
 
     At 100 TB this frame is what a dedup pipeline persists between
     stages (the dedup_index_persisted machinery stores exactly these
     hashes); in-session it is an executor-side localCheckpoint, rebuilt
     from parquet on every invocation (SPARK_GRAFT_NO_MATERIALIZE=1
-    restores the lazy 3-reference plan for A/B)."""
+    restores the lazy multi-reference plan for A/B)."""
     from mapreduce_spark.operators.artifacts import materialize
 
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    return materialize(
-        sh.select("doc_id", F.transform("sgl", md5_long).alias("hs"))
-    )
+    return materialize(shingle_fingerprints(_doc_shingles(spark, sf_dir)))
 
 
 def _bs_from_hs(hsf: DataFrame) -> DataFrame:
@@ -250,17 +256,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     same band-key rule (_band_key_fn picks the packed encoding for the
     2-row demo bands), same exchange-reuse pin on the bucket key.
 
-    r13 (guide §8): the query now runs over the stored shingle-
-    FINGERPRINT pass (_doc_shingle_hashes) — ONE corpus
-    tokenize/shingle/hash scan materialized as (doc_id, hs int64[]),
-    feeding signatures (hs % P — bit-identical to base_hashes) and
-    both exact-verify sides (hash-set Jaccard == string Jaccard under
-    the injectivity checked at every graded SF). This supersedes the
-    r12-reverted STRING-frame checkpoint: what lost there was
-    serializing fat string arrays; the int64 fingerprint table is ~5x
-    narrower and the verify joins no longer ship strings at all."""
-    hsf = _doc_shingle_hashes(spark, sf_dir)
-    return fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
+    Runs over the stored shingle-fingerprint pass (_doc_shingle_hashes):
+    ONE corpus tokenize/shingle/hash scan feeds signatures and both
+    exact-verify sides. A checkpoint of the STRING shingle frame lost
+    its A/B (serializing fat string arrays); the int64 fingerprint
+    table is ~5x narrower and the verify joins ship no strings."""
+    return minhash_lsh_pairs(_doc_shingle_hashes(spark, sf_dir), N_PERMS, N_BANDS)
 
 
 # ---------------------------------------------------------------------------
@@ -293,8 +294,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared RARE shingles are then verified with exact Jaccard over the
     FULL shingle sets. Pairs sharing only frequent shingles are skipped by
     design — the standard recall/cost tradeoff, tuned by NGRAM_DF_MAX."""
-    sh = _doc_shingles(spark, sf_dir)
-    ex = sh.select("doc_id", F.explode("sgl").alias("s"))
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    ex = hsf.select("doc_id", F.explode("hs").alias("s"))
     rare = (
         ex.groupBy("s")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -311,20 +312,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= NGRAM_JACCARD_MIN)
-    )
+    return _with_jaccard(pairs, hsf).filter(F.col("jaccard") >= NGRAM_JACCARD_MIN)
 
 
 # ---------------------------------------------------------------------------
@@ -1221,18 +1209,8 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is quadratic in per-shingle document frequency (no NGRAM_DF_MAX
     pruning — pruning is what the report must be able to indict). Run on
     a sample at 100 TB, like ann_recall_report."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    truth = exact_jaccard_truth(sh)
-    found = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    ct = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
-    return ct.crossJoin(cf).select(
-        "n_true",
-        "n_found",
-        F.when(F.col("n_true") == 0, F.lit(1.0))
-        .otherwise(F.round(F.col("n_found").cast("double") / F.col("n_true"), 6))
-        .alias("recall"),
-    )
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    return _recall_report(hsf, minhash_lsh_pairs(hsf, N_PERMS, N_BANDS))
 
 
 # ---------------------------------------------------------------------------
@@ -1294,10 +1272,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     so downstream jobs (incremental dedup, cross-corpus joins, external
     ANN systems) never re-shingle the corpus. Bit-identical across
     engines (md5 base hash + integer permutations). Zero shuffles: pure
-    per-row array math fused into the scan."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    hb = sh.select("doc_id", base_hashes(F.col("sgl")).alias("bs"))
-    return hb.select(
+    per-row array math over the stored fingerprint pass."""
+    return _bs_from_hs(_doc_shingle_hashes(spark, sf_dir)).select(
         "doc_id",
         *[_minhash_sig(F.col("bs"), i).alias(f"sig{i}") for i in range(N_PERMS)],
     )
@@ -1385,9 +1361,7 @@ def _band_key_fn(rows_per_band: int):
     (one-shot queries, the persistable index, the profile-parameterized
     pair builder): bands of <= 2 rows pack collision-free into one
     BIGINT; wider bands md5-hash the signature tuple. One rule means a
-    stored index and any same-profile query are always key-compatible
-    (r4 review finding: minhash_lsh_pairs used to hardcode the hashed
-    key, so its demo-profile buckets differed from minhash_index's)."""
+    stored index and any same-profile query are always key-compatible."""
     return _band_hash if rows_per_band <= 2 else _hashed_band_key
 
 
@@ -1399,75 +1373,36 @@ def _sql_band_key(band: int, rows_per_band: int) -> str:
 
 
 def minhash_lsh_pairs(
-    sh: DataFrame,
+    hsf: DataFrame,
     n_perms: int,
     n_bands: int,
     threshold: float = JACCARD_THRESHOLD,
-    sig_fn=None,
 ) -> DataFrame:
     """Profile-parameterized MinHash LSH near-dup pairs over a
-    (doc_id, sgl) distinct-shingle frame: signatures -> hashed band keys
+    (doc_id, hs) shingle-fingerprint frame (_doc_shingle_hashes, or
+    shingle_fingerprints on a planted corpus): signatures -> band keys
     -> bucket equi-join -> exact-Jaccard verify >= threshold.
 
     Candidates come from the CAPPED in-group enumeration (operators/
     pairing.bucketed_pairs): buckets at healthy occupancy enumerate
     inside their (band_idx, band_hash) group off one groupBy-collect
-    exchange — the r5 speed win over the band self-join that re-derived
-    the {n_perms}-permutation signature pipeline on both inputs
-    (measured 5.2 s -> 2.1 s at the production geometry, sf0.1) — while
-    buckets above BUCKET_CAP fall back to a salted self-join, because
-    AQE splits partitions, not aggregation groups: the uncapped r5 form
-    would materialize a 1e5-copy boilerplate bucket's 5e9 pairs inside
-    ONE group (VERDICT r5 #1). minhash_band_stats is the gauge that
-    prices the cap."""
-    return lsh_verified_pairs(
-        sh, minhash_bands(sh, n_perms, n_bands, sig_fn), threshold
-    )
+    exchange — faster than a band self-join that re-derives the
+    {n_perms}-permutation signature pipeline on both inputs (measured
+    5.2 s -> 2.1 s at the production geometry, sf0.1) — while buckets
+    above BUCKET_CAP fall back to a salted self-join, because AQE
+    splits partitions, not aggregation groups: an uncapped form would
+    materialize a 1e5-copy boilerplate bucket's 5e9 pairs inside ONE
+    group. minhash_band_stats is the gauge that prices the cap."""
+    return lsh_verified_pairs(hsf, _kperm_bands(hsf, n_perms, n_bands), threshold)
 
 
-def fingerprint_lsh_pairs(
-    hsf: DataFrame,
-    n_perms: int,
-    n_bands: int,
-    threshold: float = JACCARD_THRESHOLD,
-    sig_fn=None,
-) -> DataFrame:
-    """minhash_lsh_pairs over the stored shingle-fingerprint frame
-    (_doc_shingle_hashes): signatures and both verify sides read the
-    materialized (doc_id, hs) table — one corpus scan per query instead
-    of three, and the verify joins ship int64 arrays, not strings.
-    Values equal minhash_lsh_pairs' exactly (bs = hs % P elementwise ==
-    base_hashes; hash-set Jaccard == string Jaccard under injectivity —
-    see _doc_shingle_hashes)."""
-    sig_fn = sig_fn or sig_array_from_bs
-    bands = bands_from_sig(
-        sig_fn(_bs_from_hs(hsf), n_perms), n_bands, n_perms // n_bands
-    )
-    return lsh_verified_pairs(hsf, bands, threshold, set_col="hs")
-
-
-def lsh_verified_pairs(
-    sh: DataFrame,
-    bands: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    set_col: str = "sgl",
-) -> DataFrame:
-    """Bucket-join + exact-Jaccard verify over an ARBITRARY
-    (doc_id, band_idx, band_hash) band table — the candidate/verify tail
-    every signature family (k-perm, OPH) shares, so the capped pairing
-    and verification semantics can never diverge between tiers.
-
-    ``set_col`` names the per-document set column Jaccard runs over:
-    ``sgl`` (string shingles — the oracle's literal formulation) or
-    ``hs`` (the 60-bit shingle fingerprints of _doc_shingle_hashes —
-    same set sizes and intersections under hash injectivity, but the
-    verify joins ship narrow int64 arrays instead of string arrays,
-    guide §2.3)."""
-    pairs = bucketed_pairs(
-        bands, ["band_idx", "band_hash"], "doc_id", "doc_a", "doc_b"
-    ).dropDuplicates(["doc_a", "doc_b"])
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("set_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("set_b"))
+def _with_jaccard(pairs: DataFrame, hsf: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for a (doc_a, doc_b) pair frame: exact
+    set Jaccard over both documents' fingerprint sets, rounded to 6
+    places like every oracle — the one verify step of every
+    set-similarity tier."""
+    sa = hsf.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("set_a"))
+    sb = hsf.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("set_b"))
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     return (
@@ -1478,39 +1413,67 @@ def lsh_verified_pairs(
             "doc_b",
             F.round(inter.cast("double") / union, 6).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
-def minhash_sig_array(sh: DataFrame, n_perms: int) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — the perm-ordered signature array
-    under an arbitrary profile, via the DATA PATH instead of n_perms
-    unrolled fold columns: explode each doc's base hashes, fan every
-    hash out to its n_perms permuted values through ONE small
-    coeff-array expression, partial-aggregate the per-(doc, perm) min
-    map-side, and reassemble. At the production 144-perm profile the
-    unrolled form cost ~3.5 s of Catalyst analysis + codegen PER PLAN
-    CONSTRUCTION, and a nested transform-of-transform array form
-    executed interpreted at ~5.5 s — the exploded form runs in
-    whole-stage codegen. Values are identical (min is order-independent;
-    per-perm arithmetic is unchanged). The size(sgl) > 0 guard mirrors
-    the oracles' len(sgl) > 0. The DEMO profile's derivation (12 perms
-    keep the fan-out cheap JVM-side); the production 144-perm profile
-    rides minhash_sig_array_np, pinned bit-identical below."""
-    return sig_array_from_bs(_bs_frame(sh), n_perms)
+def _lsh_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a (band_idx, band_hash)
+    bucket, via the capped bucket join."""
+    return bucketed_pairs(
+        bands, ["band_idx", "band_hash"], "doc_id", "doc_a", "doc_b"
+    ).dropDuplicates(["doc_a", "doc_b"])
 
 
-def _bs_frame(sh: DataFrame) -> DataFrame:
-    """(doc_id, bs) — 31-bit base hashes from a (doc_id, sgl) frame."""
-    return sh.filter(F.size("sgl") > 0).select(
-        "doc_id", base_hashes(F.col("sgl")).alias("bs")
+def lsh_verified_pairs(
+    hsf: DataFrame,
+    bands: DataFrame,
+    threshold: float = JACCARD_THRESHOLD,
+) -> DataFrame:
+    """Bucket-join + exact-Jaccard verify over an ARBITRARY
+    (doc_id, band_idx, band_hash) band table — the candidate/verify tail
+    every signature family (k-perm, OPH) shares, so the capped pairing
+    and verification semantics can never diverge between tiers."""
+    return _with_jaccard(_lsh_candidates(bands), hsf).filter(
+        F.col("jaccard") >= threshold
     )
+
+
+# From this many permutations up, signatures take the Arrow kernel: the
+# exploded form's |hashes| x n_perms row shuffle dominates at the
+# production 144, while the demo 8 do not pay for an Arrow crossing.
+# The two kernels are bit-identical (tests/test_bbit_minhash.py).
+_ARROW_SIG_MIN_PERMS = 32
+
+
+def _kperm_sig(hsf: DataFrame, n_perms: int) -> DataFrame:
+    """(doc_id, sig: array<bigint>) — the perm-ordered k-perm MinHash
+    signature of each fingerprint set (base hashes bs = hs % P), through
+    the kernel _ARROW_SIG_MIN_PERMS picks for ``n_perms``."""
+    kernel = (
+        sig_array_np_from_bs if n_perms >= _ARROW_SIG_MIN_PERMS else sig_array_from_bs
+    )
+    return kernel(_bs_from_hs(hsf), n_perms)
+
+
+def _kperm_bands(hsf: DataFrame, n_perms: int, n_bands: int) -> DataFrame:
+    """(doc_id, band_idx, band_hash) under an arbitrary k-perm profile —
+    the band table minhash_lsh_pairs buckets on and minhash_band_stats
+    audits (one builder so the gauge prices exactly the keys the dedup
+    tier joins on)."""
+    return bands_from_sig(_kperm_sig(hsf, n_perms), n_bands, n_perms // n_bands)
 
 
 def sig_array_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
-    """minhash_sig_array's derivation from an already-hashed
-    (doc_id, bs: array<bigint>) base-hash frame — the entry point the
-    stored-fingerprint pass uses (bs = hs % P, no re-tokenization)."""
+    """(doc_id, sig: array<bigint>) from a (doc_id, bs) base-hash frame,
+    via the DATA PATH instead of n_perms unrolled fold columns: explode
+    each doc's base hashes, fan every hash out to its n_perms permuted
+    values through ONE small coeff-array expression, partial-aggregate
+    the per-(doc, perm) min map-side, and reassemble. At the production
+    144-perm profile the unrolled form cost ~3.5 s of Catalyst analysis
+    + codegen PER PLAN CONSTRUCTION, and a nested transform-of-transform
+    array form executed interpreted at ~5.5 s — the exploded form runs
+    in whole-stage codegen. Values are identical (min is
+    order-independent; per-perm arithmetic is unchanged)."""
     coeffs = "array(" + ", ".join(
         f"named_struct('p', {i}, 'a', {a}L, 'b', {b}L)"
         for i, (a, b) in ((i, _perm_coeffs(i)) for i in range(n_perms))
@@ -1538,15 +1501,13 @@ def sig_array_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
 MH_NP_SLAB = 1 << 16  # rows of the (hashes x perms) fan-out per slab
 
 
-def minhash_sig_array_np(sh: DataFrame, n_perms: int) -> DataFrame:
-    """minhash_sig_array computed as an Arrow-batched int64 fan-out
+def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
+    """sig_array_from_bs computed as an Arrow-batched int64 fan-out
     (mapInPandas) instead of the explode + per-(doc, perm) hash-agg
-    plan — bit-identical signatures: the md5 base hashes still derive
-    JVM-side from the exact expression the exploded form uses, and the
-    permutation is the same (a*h + b) mod P in exact int64 arithmetic
-    (a, h < P = 2^31-1 keeps a*h < 2^62). Pinned frame-for-frame
-    against minhash_sig_array at both graded profiles by
-    tests/test_bbit_minhash.py.
+    plan — bit-identical signatures: the permutation is the same
+    (a*h + b) mod P in exact int64 arithmetic (a, h < P = 2^31-1 keeps
+    a*h < 2^62). Pinned frame-for-frame against sig_array_from_bs at
+    both graded profiles by tests/test_bbit_minhash.py.
 
     Why it exists: the exploded form shuffles |shingle hashes| x
     n_perms rows into the per-(doc, perm) min — at the production
@@ -1557,16 +1518,7 @@ def minhash_sig_array_np(sh: DataFrame, n_perms: int) -> DataFrame:
     Here the fan-out never leaves its partition: per document it is a
     (|bs| x n_perms) int64 broadcast product reduced along axis 0,
     sliced into <= MH_NP_SLAB-row slabs so a pathological
-    million-shingle document stays bounded-memory. The demo profile
-    keeps the exploded JVM form (12 permutations do not pay for an
-    Arrow crossing)."""
-    return sig_array_np_from_bs(_bs_frame(sh), n_perms)
-
-
-def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
-    """minhash_sig_array_np's Arrow kernel from an already-hashed
-    (doc_id, bs) frame — sig_array_from_bs's production-profile twin,
-    the entry the stored-fingerprint pass feeds (bs = hs % P)."""
+    million-shingle document stays bounded-memory."""
     import numpy as np
     import pandas as pd
 
@@ -1593,23 +1545,6 @@ def sig_array_np_from_bs(bsf: DataFrame, n_perms: int) -> DataFrame:
 
     return bsf.select("doc_id", "bs").mapInPandas(
         derive, "doc_id bigint, sig array<bigint>"
-    )
-
-
-def minhash_bands(
-    sh: DataFrame, n_perms: int, n_bands: int, sig_fn=None
-) -> DataFrame:
-    """(doc_id, band_idx, band_hash) under an arbitrary profile — the
-    band table minhash_lsh_pairs buckets on and minhash_band_stats
-    audits (one builder so the gauge prices exactly the keys the dedup
-    tier joins on). Band keys derive from the signature arrays of
-    ``sig_fn`` (default minhash_sig_array; the scaled profile passes
-    minhash_sig_array_np — bit-identical, so band keys can never
-    diverge between derivations); a null band key must never form a
-    bucket (empty docs are filtered before signatures exist)."""
-    sig_fn = sig_fn or minhash_sig_array
-    return bands_from_sig(
-        sig_fn(sh, n_perms), n_bands, n_perms // n_bands
     )
 
 
@@ -1692,33 +1627,44 @@ def dedup_minhash_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive exact-Jaccard ground truth via the recall-report
     machinery. Runs over the stored fingerprint pass — one corpus scan,
     int64 verify (see dedup_minhash_lsh)."""
-    hsf = _doc_shingle_hashes(spark, sf_dir)
-    return fingerprint_lsh_pairs(
-        hsf, SCALED_PERMS, SCALED_BANDS, sig_fn=sig_array_np_from_bs
+    return minhash_lsh_pairs(
+        _doc_shingle_hashes(spark, sf_dir), SCALED_PERMS, SCALED_BANDS
     )
 
 
-def exact_jaccard_truth(sh: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+def exact_jaccard_truth(hsf: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
     """Exhaustive ground truth: every (doc_a < doc_b) pair with exact
     shingle-Jaccard >= threshold, via an UNPRUNED inverted shingle index
-    (complete: any positive-Jaccard pair shares a shingle). Diagnostic
-    cost profile — quadratic in per-shingle document frequency."""
-    ex = sh.select("doc_id", F.explode("sgl").alias("s"))
+    over the fingerprint frame (complete: any positive-Jaccard pair
+    shares a shingle). Diagnostic cost profile — quadratic in
+    per-shingle document frequency."""
+    ex = hsf.select("doc_id", F.explode("hs").alias("s"))
     a, b = ex.alias("a"), ex.alias("b")
     cand = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(F.round(inter.cast("double") / union, 6) >= threshold)
+        _with_jaccard(cand, hsf)
+        .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b")
+    )
+
+
+def _recall_report(hsf: DataFrame, found: DataFrame) -> DataFrame:
+    """(n_true, n_found, recall) of an LSH tier's verified pairs
+    ``found`` against exact_jaccard_truth — the tail every recall
+    report shares. Found pairs are exact-verified, hence a subset of
+    truth, so counts suffice."""
+    ct = exact_jaccard_truth(hsf).agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
+    cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
+    return ct.crossJoin(cf).select(
+        "n_true",
+        "n_found",
+        F.when(F.col("n_true") == 0, F.lit(1.0))
+        .otherwise(F.round(F.col("n_found").cast("double") / F.col("n_true"), 6))
+        .alias("recall"),
     )
 
 
@@ -1758,20 +1704,8 @@ def dedup_recall_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (>= 0.5) ground truth. This is the number the scaled profile's
     credibility rests on — asserted >= 0.9 in tests/test_dedup_scaled.py.
     Diagnostic path, like dedup_recall_report: run on a sample at 100 TB."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    truth = exact_jaccard_truth(sh)
-    found = minhash_lsh_pairs(
-        sh, SCALED_PERMS, SCALED_BANDS, sig_fn=minhash_sig_array_np
-    ).select("doc_a", "doc_b")
-    ct = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
-    return ct.crossJoin(cf).select(
-        "n_true",
-        "n_found",
-        F.when(F.col("n_true") == 0, F.lit(1.0))
-        .otherwise(F.round(F.col("n_found").cast("double") / F.col("n_true"), 6))
-        .alias("recall"),
-    )
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    return _recall_report(hsf, minhash_lsh_pairs(hsf, SCALED_PERMS, SCALED_BANDS))
 
 
 # ---------------------------------------------------------------------------
@@ -1782,25 +1716,9 @@ def dedup_recall_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is exact-verified); candidate precision is what sets the verify bill.
 
 
-def _candidate_precision(
-    sh: DataFrame, n_perms: int, n_bands: int, sig_fn=None
-) -> DataFrame:
+def _candidate_precision(hsf: DataFrame, n_perms: int, n_bands: int) -> DataFrame:
     """(n_candidates, n_verified, precision) for one band profile."""
-    bands = minhash_bands(sh, n_perms, n_bands, sig_fn)
-    cand = bucketed_pairs(
-        bands, ["band_idx", "band_hash"], "doc_id", "doc_a", "doc_b"
-    ).dropDuplicates(["doc_a", "doc_b"])
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
-    j = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            F.round(inter.cast("double") / union, 6).alias("jaccard")
-        )
-    )
+    j = _with_jaccard(_lsh_candidates(_kperm_bands(hsf, n_perms, n_bands)), hsf)
     return j.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
         F.sum(
@@ -1851,8 +1769,7 @@ def dedup_precision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade is recall (dedup_recall_report, wants more bands) against this
     number (wants fewer) — together they price a band-count change
     BEFORE a 100 TB run commits to it."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    return _candidate_precision(sh, N_PERMS, N_BANDS)
+    return _candidate_precision(_doc_shingle_hashes(spark, sf_dir), N_PERMS, N_BANDS)
 
 
 @register(
@@ -1866,9 +1783,8 @@ def dedup_precision_report_scaled(spark: SparkSession, sf_dir: str) -> DataFrame
     exists to watch; tests/test_dedup_scaled.py pins that every emitted
     near-dup pair is still exact-verified (output precision 1.0) while
     candidate precision is strictly measured here."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
     return _candidate_precision(
-        sh, SCALED_PERMS, SCALED_BANDS, sig_fn=minhash_sig_array_np
+        _doc_shingle_hashes(spark, sf_dir), SCALED_PERMS, SCALED_BANDS
     )
 
 
@@ -2030,16 +1946,15 @@ def minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket join launches (boilerplate shingles, empty-ish docs), and the
     fix — shingle-DF pruning or band-key salting — is decided off this
     table. Audits EXACTLY the keys minhash_lsh_pairs buckets on
-    (minhash_bands is the shared builder).
+    (_kperm_bands is the shared builder).
 
     Plan shape: the signature data path (one md5 per shingle, then the
     Arrow-batched permutation fan-out — the scaled profile's
     derivation), a (band, key) partial-agg shuffle, then a
     {SCALED_BANDS}-row rollup — strictly cheaper than the join it
     prices."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
     per = (
-        minhash_bands(sh, SCALED_PERMS, SCALED_BANDS, minhash_sig_array_np)
+        _kperm_bands(_doc_shingle_hashes(spark, sf_dir), SCALED_PERMS, SCALED_BANDS)
         .groupBy("band_idx", "band_hash")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -2083,8 +1998,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one shingle pass, one s-keyed groupBy (map-side
     combined), one equi-join back on s, one doc_id rollup — at 100 TB
     every stage keys on the shingle hash or doc_id, nothing quadratic."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    ex = sh.select("doc_id", F.explode("sgl").alias("s"))
+    ex = _doc_shingle_hashes(spark, sf_dir).select("doc_id", F.explode("hs").alias("s"))
     firsts = ex.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     per = (
         ex.join(firsts, "s")
@@ -2291,10 +2205,9 @@ def minhash_bbit_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips it), so nothing beyond the deliberate b-bit truncation
     is lost; bbit_jaccard_report grades what the truncation costs as an
     estimator. Zero shuffles: the Arrow-batched signature fan-out
-    (minhash_sig_array_np) and the packing both stay inside the scan's
-    partitions."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    sig = minhash_sig_array_np(sh, SCALED_PERMS)
+    (sig_array_np_from_bs) and the packing both stay inside the
+    partitions of the stored fingerprint pass."""
+    sig = _kperm_sig(_doc_shingle_hashes(spark, sf_dir), SCALED_PERMS)
     # '_'-joined word string, not an array: the driver's pandas
     # canonicalizer cannot sort array cells (CORRECTNESS_r07 ERR class);
     # the encoding is bijective (split('_') recovers the words).
@@ -2372,16 +2285,12 @@ def bbit_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bbit_minhash.py). Plan: the pair set is the audited LSH
     bucket join; both agreement sums are row-local zip_with folds over
     the two {SCALED_PERMS}-long arrays — nothing pairwise beyond the
-    candidates LSH already admitted.
-
-    r13: rides the stored fingerprint pass (_doc_shingle_hashes) — the
-    old plan re-derived the corpus SIX times (the LSH trio's three
-    references plus both {SCALED_PERMS}-perm signature sides); now one
-    materialized scan feeds all six (same values — see
-    dedup_minhash_lsh)."""
+    candidates LSH already admitted. One materialized fingerprint scan
+    feeds all six corpus references (the LSH trio's three plus both
+    {SCALED_PERMS}-perm signature sides)."""
     hsf = _doc_shingle_hashes(spark, sf_dir)
-    pairs = fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
-    sig = sig_array_np_from_bs(_bs_from_hs(hsf), SCALED_PERMS)
+    pairs = minhash_lsh_pairs(hsf, N_PERMS, N_BANDS)
+    sig = _kperm_sig(hsf, SCALED_PERMS)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
     agree_full = F.aggregate(
@@ -2443,44 +2352,6 @@ OPH_C = MINHASH_P // OPH_BINS + 1  # per-step borrow offset > max bin value
 OPH_BIGC = 1 << 34               # (distance, value) argmin packing
 
 
-def _oph_entries(sh: DataFrame) -> DataFrame:
-    """(doc_id, pe): per document, the POPULATED bins as packed
-    bin * 2^31 + min_value entries (sorted by bin). One md5 per shingle
-    — the entire hashing bill.
-
-    Row-local by design (perf, round 9): packing (bin, value) into one
-    BIGINT makes array_sort order by (bin, then value), so "min value
-    per populated bin" is just "first entry of each bin run" — a sort +
-    adjacent-dedup inside ONE projection. The previous explode +
-    groupBy(doc_id, bin) + collect_list formulation produced identical
-    pe but paid two shuffles, and because every LSH consumer re-derives
-    the signature on both sides of its joins, those shuffles ran 3-4x
-    per query (27 s vs 3 s at sf0.1 for dedup_minhash_lsh_oph)."""
-    return _oph_entries_from_bs(_bs_frame(sh))
-
-
-def _oph_entries_from_bs(bsf: DataFrame) -> DataFrame:
-    """_oph_entries from an already-hashed (doc_id, bs) frame — the
-    entry the stored-fingerprint pass feeds (bs = hs % P)."""
-    return (
-        bsf.select("doc_id", F.col("bs").alias("hs"))
-        .select(
-            "doc_id",
-            F.expr(
-                f"array_sort(transform(hs, h -> (h % {OPH_BINS}) "
-                f"* cast({OPH_PACK} as bigint) + h div {OPH_BINS}))"
-            ).alias("pk"),
-        )
-        .select(
-            "doc_id",
-            F.expr(
-                f"filter(pk, (e, i) -> i = 0 "
-                f"or e div {OPH_PACK} <> pk[i - 1] div {OPH_PACK})"
-            ).alias("pe"),
-        )
-    )
-
-
 # Densified signature from the populated entries `pe`, O(BINS) per doc:
 # every populated bin b fills ITSELF (d = 0) plus the run of empty bins
 # below it down to the previous populated bin (bin b - d borrows from b
@@ -2513,6 +2384,39 @@ _SQL_OPH_DENSE = (
     f"+ {OPH_C} * (((e // {OPH_PACK}) - i + {OPH_BINS}) % {OPH_BINS})), "
     f"'min') % {OPH_BIGC})"
 )
+
+
+def _oph_sig(hsf: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<bigint>) — the densified OPH signature of each
+    fingerprint set (bs = hs % P, one md5 per shingle — the entire
+    hashing bill) as the slot-ordered array the band builder slices.
+
+    The populated bins derive row-locally: packing (bin, value) as
+    bin * 2^31 + value makes array_sort order by (bin, then value), so
+    "min value per populated bin" is "first entry of each bin run" — a
+    sort + adjacent-dedup inside ONE projection. An explode +
+    groupBy(doc_id, bin) + collect_list form produces identical entries
+    but pays two shuffles per signature reference (27 s vs 3 s at sf0.1
+    for dedup_minhash_lsh_oph)."""
+    return (
+        _bs_from_hs(hsf)
+        .select(
+            "doc_id",
+            F.expr(
+                f"array_sort(transform(bs, h -> (h % {OPH_BINS}) "
+                f"* cast({OPH_PACK} as bigint) + h div {OPH_BINS}))"
+            ).alias("pk"),
+        )
+        .select(
+            "doc_id",
+            F.expr(
+                f"filter(pk, (e, i) -> i = 0 "
+                f"or e div {OPH_PACK} <> pk[i - 1] div {OPH_PACK})"
+            ).alias("pe"),
+        )
+        .select("doc_id", F.expr(_OPH_DENSE_EXPR).alias("sig"))
+    )
+
 
 _SQL_OPH_SIG_CTES = (
     _SQL_SH_CTE
@@ -2548,15 +2452,10 @@ def oph_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     the COMMON path, not an edge case; every signature slot is always
     defined (pinned in tests/test_oph.py). oph_jaccard_report grades
     the estimator these signatures carry."""
-    ent = _oph_entries(
-        _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    )
     # '_'-joined slot string (driver-canon-safe; split('_') recovers it)
-    return ent.select(
+    return _oph_sig(_doc_shingle_hashes(spark, sf_dir)).select(
         "doc_id",
-        F.concat_ws(
-            "_", F.expr(_OPH_DENSE_EXPR).cast("array<string>")
-        ).alias("oph_sig"),
+        F.concat_ws("_", F.col("sig").cast("array<string>")).alias("oph_sig"),
     )
 
 
@@ -2611,16 +2510,13 @@ def oph_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     put all three signature families on one axis: k-perm (the
     reference), b-bit (8x smaller storage), OPH ({SCALED_PERMS}x
     cheaper to compute). Plan: the audited demo LSH pair set plus one
-    row-local fold over the two {OPH_BINS}-slot arrays per pair.
-    r13: rides the stored fingerprint pass (see bbit_jaccard_report —
-    five corpus re-derivations collapse to one materialized scan)."""
+    row-local fold over the two {OPH_BINS}-slot arrays per pair, all
+    over one materialized fingerprint scan."""
     hsf = _doc_shingle_hashes(spark, sf_dir)
-    pairs = fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS)
-    sig = _oph_entries_from_bs(_bs_from_hs(hsf)).select(
-        "doc_id", F.expr(_OPH_DENSE_EXPR).alias("oph_sig")
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("oph_sig").alias("sa"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("oph_sig").alias("sb"))
+    pairs = minhash_lsh_pairs(hsf, N_PERMS, N_BANDS)
+    sig = _oph_sig(hsf)
+    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
+    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
     agree = F.aggregate(
         F.zip_with("sa", "sb", lambda x, y: (x == y).cast("bigint")),
         F.lit(0).cast("bigint"),
@@ -2640,7 +2536,7 @@ def oph_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# OPH as the PRODUCTION signature source (VERDICT r7 #6): oph_signatures
+# OPH as the PRODUCTION signature source: oph_signatures
 # proves the 144x-cheaper signature; this tier CONSUMES it — the band
 # index is built FROM the densified OPH slots under the same 36-band
 # geometry the k-perm production profile uses, through the same capped
@@ -2650,35 +2546,16 @@ def oph_jaccard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 OPH_ROWS_PER_BAND = OPH_BINS // SCALED_BANDS  # 4 slots per band
 
 
-def oph_sig_frame(sh: DataFrame) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — the densified OPH signature as the
-    slot-ordered array the band builder slices (oph_signatures' data
-    path before its driver-safe string encoding)."""
-    return _oph_entries(sh).select(
-        "doc_id", F.expr(_OPH_DENSE_EXPR).alias("sig")
-    )
-
-
-def _oph_sig_from_bs(bsf: DataFrame) -> DataFrame:
-    """oph_sig_frame from an already-hashed (doc_id, bs) frame — the
-    entry the stored-fingerprint pass feeds."""
-    return _oph_entries_from_bs(bsf).select(
-        "doc_id", F.expr(_OPH_DENSE_EXPR).alias("sig")
-    )
-
-
 def oph_lsh_pairs(
-    sh: DataFrame, threshold: float = JACCARD_THRESHOLD
+    hsf: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
-    """OPH-signature LSH near-dup pairs at the production geometry:
-    {OPH_BINS} densified slots -> {SCALED_BANDS} bands of
-    {OPH_ROWS_PER_BAND} -> hashed band keys (slots are 34-bit, so the
-    4-row band always rides _band_key_fn's md5 path) -> capped bucket
-    join -> exact verify."""
-    bands = bands_from_sig(
-        oph_sig_frame(sh), SCALED_BANDS, OPH_ROWS_PER_BAND
-    )
-    return lsh_verified_pairs(sh, bands, threshold)
+    """OPH-signature LSH near-dup pairs at the production geometry over
+    a (doc_id, hs) fingerprint frame: {OPH_BINS} densified slots ->
+    {SCALED_BANDS} bands of {OPH_ROWS_PER_BAND} -> hashed band keys
+    (slots are 34-bit, so the 4-row band always rides _band_key_fn's
+    md5 path) -> capped bucket join -> exact verify."""
+    bands = bands_from_sig(_oph_sig(hsf), SCALED_BANDS, OPH_ROWS_PER_BAND)
+    return lsh_verified_pairs(hsf, bands, threshold)
 
 
 _SQL_OPH_LSH_CTES = (
@@ -2729,11 +2606,7 @@ def dedup_minhash_lsh_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 0.02 in tests/test_oph.py via dedup_recall_report_oph.
     Runs over the stored fingerprint pass — one corpus scan, int64
     verify (see dedup_minhash_lsh)."""
-    hsf = _doc_shingle_hashes(spark, sf_dir)
-    bands = bands_from_sig(
-        _oph_sig_from_bs(_bs_from_hs(hsf)), SCALED_BANDS, OPH_ROWS_PER_BAND
-    )
-    return lsh_verified_pairs(hsf, bands, JACCARD_THRESHOLD, set_col="hs")
+    return oph_lsh_pairs(_doc_shingle_hashes(spark, sf_dir))
 
 
 _SQL_OPH_RECALL = (
@@ -2772,20 +2645,8 @@ def dedup_recall_report_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing the k-perm signature bill with OPH's — tests/test_oph.py
     asserts it within 0.02 of the k-perm tier's on the same corpus.
     Diagnostic path: run on a sample at 100 TB."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    truth = exact_jaccard_truth(sh)
-    found = oph_lsh_pairs(sh).select("doc_a", "doc_b")
-    ct = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    cf = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found"))
-    return ct.crossJoin(cf).select(
-        "n_true",
-        "n_found",
-        F.when(F.col("n_true") == 0, F.lit(1.0))
-        .otherwise(
-            F.round(F.col("n_found").cast("double") / F.col("n_true"), 6)
-        )
-        .alias("recall"),
-    )
+    hsf = _doc_shingle_hashes(spark, sf_dir)
+    return _recall_report(hsf, oph_lsh_pairs(hsf))
 
 
 # ---------------------------------------------------------------------------
@@ -2801,48 +2662,43 @@ def dedup_recall_report_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that tracks prefix-token document frequency — the right tier when a
 # contract says "every duplicate, guaranteed" and the corpus fits the
 # heavier join.
-def allpairs_prefix_pairs(
-    sh: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard): ALL pairs with exact shingle-Jaccard >=
-    threshold, via rarest-first prefix filtering + the capped bucket
-    join + exact verify. The prefix of a doc with n shingles is its
-    first n - ceil(t*n) + 1 shingles under the global (frequency,
-    shingle) order; any qualifying pair must collide inside both
-    prefixes (the SSJoin lemma with a = max of the two per-doc overlap
-    bounds), so completeness is unconditional."""
-    ex = sh.select("doc_id", F.explode("sgl").alias("tok"))
+def _prefix_index(ex: DataFrame, threshold: float) -> tuple[DataFrame, DataFrame]:
+    """(freq, pre) for an exploded (doc_id, tok) frame: each token's
+    document frequency tf, and each doc's rarest-first prefix — its
+    first n - ceil(t*n) + 1 tokens under the global (tf, tok) order."""
     freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    ordered = (
+    pre = (
         ex.join(freq, "tok")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
-    )
-    pre = ordered.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(slice(ord, 1, size(ord) "
-                f"- cast(ceil({threshold} * size(ord)) as int) + 1), "
-                "s -> s.tok)"
-            )
-        ).alias("tok"),
-    )
-    cand = bucketed_pairs(pre, ["tok"], "doc_id", "doc_a", "doc_b").distinct()
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sgl").alias("sgl_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sgl").alias("sgl_b"))
-    inter = F.size(F.array_intersect("sgl_a", "sgl_b"))
-    union = F.size("sgl_a") + F.size("sgl_b") - inter
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
         .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
+            "doc_id",
+            F.explode(
+                F.expr(
+                    f"transform(slice(ord, 1, size(ord) "
+                    f"- cast(ceil({threshold} * size(ord)) as int) + 1), "
+                    "s -> s.tok)"
+                )
+            ).alias("tok"),
         )
-        .filter(F.col("jaccard") >= threshold)
     )
+    return freq, pre
+
+
+def allpairs_prefix_pairs(
+    hsf: DataFrame, threshold: float = JACCARD_THRESHOLD
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard): ALL pairs with exact shingle-Jaccard >=
+    threshold over a (doc_id, hs) fingerprint frame, via rarest-first
+    prefix filtering + the capped bucket join + exact verify. Any
+    qualifying pair must collide inside both prefixes (the SSJoin lemma
+    with a = max of the two per-doc overlap bounds) under ANY global
+    token order, so completeness is unconditional and the pair set does
+    not depend on the tie-break between equally frequent tokens."""
+    ex = hsf.select("doc_id", F.explode("hs").alias("tok"))
+    _, pre = _prefix_index(ex, threshold)
+    cand = bucketed_pairs(pre, ["tok"], "doc_id", "doc_a", "doc_b").distinct()
+    return _with_jaccard(cand, hsf).filter(F.col("jaccard") >= threshold)
 
 
 _SQL_ALLPAIRS_PREFIX = (
@@ -2891,8 +2747,7 @@ def dedup_allpairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materialize a quadratic group. tests/test_allpairs.py pins
     set-equality with the exhaustive truth AND that the prefix index is
     strictly smaller than the full inverted index it replaces."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    return allpairs_prefix_pairs(sh)
+    return allpairs_prefix_pairs(_doc_shingle_hashes(spark, sf_dir))
 
 
 _SQL_ALLPAIRS_STATS = (
@@ -2942,24 +2797,12 @@ def allpairs_prefix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix's rarest-first ordering is why the ratio lands far below the
     naive ~(1-t)^2 length-share bound. One exchange per rollup, both
     1-row sides."""
+    # String shingles, not fingerprints: which tokens enter a prefix
+    # follows the (tf, tok) tie-break, and the oracle breaks ties on
+    # the shingle string, so the prefix posting counts need the strings.
     sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
     ex = sh.select("doc_id", F.explode("sgl").alias("tok"))
-    freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    pre = (
-        ex.join(freq, "tok")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("tf", "tok"))).alias("ord"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(slice(ord, 1, size(ord) "
-                    f"- cast(ceil({JACCARD_THRESHOLD} * size(ord)) as int)"
-                    " + 1), s -> s.tok)"
-                )
-            ).alias("tok"),
-        )
-    )
+    freq, pre = _prefix_index(ex, JACCARD_THRESHOLD)
     pfreq = pre.groupBy("tok").agg(F.count(F.lit(1)).alias("pf"))
     fullstats = freq.agg(
         F.sum("tf").cast("bigint").alias("full_postings"),

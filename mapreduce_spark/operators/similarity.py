@@ -18,7 +18,6 @@ JVM-side (functions/vectors.py) and bit-reproducible in the DuckDB oracle.
 from __future__ import annotations
 
 import math
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -3788,18 +3787,6 @@ def _sql_refined_cent_body(seed_sql: str, assign_extra: str = "") -> str:
               FROM rc_q GROUP BY cid)"""
 
 
-def _sql_refined_cent_cte(cent_mod: int, rem: int) -> str:
-    """CTE chain ending in rcent(cid, ce): one Lloyd iteration from the
-    vec_id % cent_mod == rem seeds — the SQL twin of refined_centroids
-    (kmeans_refine's oracle at an arbitrary modulus, reassembled to
-    centroid arrays). Components are exact integer ratios s/n/1e6, so
-    rcent.ce is bit-identical to the Spark-side ce."""
-    return _sql_refined_cent_body(
-        f"""SELECT vec_id AS cid, embedding AS ce FROM embeddings
-                WHERE vec_id % {cent_mod} = {rem}"""
-    )
-
-
 def _sql_refined_cent_cte_sqrt() -> str:
     """DuckDB twin of ivf_centroids_sqrt: the sqrt-law seed modulus
     computed in-query (GREATEST({IVF_CENT_REM}+1, ceil(sqrt(count(*))))
@@ -4271,17 +4258,18 @@ def ivf_trained_hier(
     centroid, each centroid assigned offline to its nearest super
     (cid, ce, cn, sid). Every production IVF/IVFADC consumer and the
     persisted vector index build through this, so the whole family
-    shares one n^1.25 build geometry (BENCH_SCALE r11's fix rolled
-    family-wide). The one emb.count() is the build-time sizing scalar.
+    shares one n^1.25 build geometry. The one emb.count() is the
+    build-time sizing scalar.
 
-    DEFAULT is lazy (r12 optimization round, measured both ways): an
-    unconditional eager materialization was tried and reverted — the
-    flat consumers' few quantizer references execute concurrently on
-    idle cores, so the monolithic plan's wall-clock tracks its critical
-    path and the barrier jobs regressed them up to 1.8x at sf0.1
+    DEFAULT is lazy (measured both ways): an unconditional eager
+    materialization was tried and reverted — the flat consumers' few
+    quantizer references execute concurrently on idle cores, so the
+    monolithic plan's wall-clock tracks its critical path and the
+    barrier jobs regressed them up to 1.8x at sf0.1
     (OPTIMIZATION_r12.md). ``eager=True`` materializes the trained
-    table once (operators/artifacts.py) and recovers the super frame
-    from it (exact by the cid == sid self-assignment invariant) — the
+    table once (operators/artifacts.materialize, which also honours
+    SPARK_GRAFT_NO_MATERIALIZE) and recovers the super frame from it
+    (exact by the cid == sid self-assignment invariant) — the
     residual-ADC path opts in, where the quantizer subtree is
     referenced ~5x per plan and the cut measured 0.55x."""
     n = emb.count()
@@ -4296,7 +4284,7 @@ def ivf_trained_hier(
         F.col("ce").alias("se"),
         F.col("cn").alias("sn"),
     )
-    if eager and not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
+    if eager:
         cent_a = materialize(_hier_cent_assigned(cent, sup))
         return cent_a, _sup_from_cent_a(cent_a)
     return _hier_cent_assigned(cent, sup), sup

@@ -44,6 +44,15 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def env_on(name: str) -> bool:
+    """The one parser for boolean ``SPARK_GRAFT_*`` env knobs: unset,
+    '', '0', 'false', 'no' and 'off' mean OFF; anything else means ON
+    (plain truthiness would make '0' ON)."""
+    return os.environ.get(name, "").strip().lower() not in (
+        "", "0", "false", "no", "off",
+    )
+
+
 def default_parallelism() -> int:
     """Worker count knob: SPARK_GRAFT_CPUS env, else all cores."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

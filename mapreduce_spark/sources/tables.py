@@ -14,7 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from mapreduce_spark.session import tune_session
+from mapreduce_spark.session import env_on, tune_session
 
 TABLE_NAMES = [
     "region",
@@ -60,7 +60,7 @@ def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     "input skew: one huge unsplittable file … repartition immediately
     after the read" / §6.
 
-    Why it exists (r13, measured): parquet splits at row-group
+    Why it exists (measured): parquet splits at row-group
     granularity, so a single-file corpus scans as ONE task no matter the
     core count — the 32-vs-8-core bench at the 25x corpus showed the
     heavy per-row queries at ratio ~1.0 (cdc_chunk_stats 111 s on 32
@@ -85,9 +85,7 @@ def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     spread fully — measured a win at every scale point."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT", "").strip().lower() not in (
-        "", "0", "false", "no", "off",
-    ):
+    if env_on("SPARK_GRAFT_NO_FANOUT"):
         return df
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     want = parallelism

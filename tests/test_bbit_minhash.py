@@ -9,47 +9,46 @@ the b-bit correction).
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from mapreduce_spark.operators.dedup import (
     BBIT_NIBBLE,
     BBIT_PER_WORD,
     BBIT_WORDS,
     N_PERMS,
     SCALED_PERMS,
-    _doc_shingles,
+    _bs_from_hs,
+    _doc_shingle_hashes,
     bbit_jaccard_report,
     minhash_bbit_signatures,
-    minhash_sig_array,
-    minhash_sig_array_np,
+    sig_array_from_bs,
+    sig_array_np_from_bs,
 )
 
 
 def test_numpy_signature_derivation_is_bit_identical(spark, sf_dir):
-    """minhash_sig_array_np (the Arrow-batched fan-out every scaled-
+    """sig_array_np_from_bs (the Arrow-batched fan-out every scaled-
     profile consumer derives signatures through) must produce EXACTLY
     the same (doc_id, sig) frame as the exploded JVM derivation — same
-    md5 base hashes, same (a*h + b) mod P int64 arithmetic — at both
-    graded profiles, so band keys, b-bit words and agreement counts can
-    never diverge between the two paths."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
+    base hashes, same (a*h + b) mod P int64 arithmetic — at both graded
+    profiles, so band keys, b-bit words and agreement counts can never
+    diverge between the two kernels."""
+    bsf = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
     for n_perms in (N_PERMS, SCALED_PERMS):
         jvm = {
             r["doc_id"]: list(r["sig"])
-            for r in minhash_sig_array(sh, n_perms).collect()
+            for r in sig_array_from_bs(bsf, n_perms).collect()
         }
         npy = {
             r["doc_id"]: list(r["sig"])
-            for r in minhash_sig_array_np(sh, n_perms).collect()
+            for r in sig_array_np_from_bs(bsf, n_perms).collect()
         }
         assert jvm and jvm == npy, n_perms
 
 
 def test_packing_roundtrips_to_the_nibble_vector(spark, sf_dir):
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
+    bsf = _bs_from_hs(_doc_shingle_hashes(spark, sf_dir))
     sig = {
         r["doc_id"]: r["sig"]
-        for r in minhash_sig_array(sh, SCALED_PERMS).collect()
+        for r in sig_array_from_bs(bsf, SCALED_PERMS).collect()
     }
     # bbit_sig ships as the '_'-joined word string (driver-canon-safe);
     # split('_') must recover the exact packed words

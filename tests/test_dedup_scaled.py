@@ -23,14 +23,15 @@ from mapreduce_spark.operators.dedup import (
     SCALED_PERMS,
     exact_jaccard_truth,
     minhash_lsh_pairs,
+    shingle_fingerprints,
 )
 
 N_PAIRS = 120
 DOC_TOKENS = 60
 
 
-@pytest.fixture(scope="module", name="sh")
-def sh_fixture(spark):
+@pytest.fixture(scope="module", name="hsf")
+def hsf_fixture(spark):
     """200+ docs in pairs with token overlaps sweeping 40%..90%, so exact
     shingle-Jaccard truth densely covers [~0.35, ~0.85] — including the
     band around the 0.5 threshold that separates the two profiles."""
@@ -44,23 +45,25 @@ def sh_fixture(spark):
         rows.append((2 * i, " ".join(a)))
         rows.append((2 * i + 1, " ".join(b)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    return docs.select(
-        "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
-    ).filter(F.size("sgl") > 0)
+    return shingle_fingerprints(
+        docs.select(
+            "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
+        )
+    )
 
 
-def test_truth_covers_the_threshold_band(sh):
+def test_truth_covers_the_threshold_band(hsf):
     """The fixture must actually produce truth pairs near J=0.5, else the
     recall assertion proves nothing about band geometry."""
-    truth = exact_jaccard_truth(sh, JACCARD_THRESHOLD)
+    truth = exact_jaccard_truth(hsf, JACCARD_THRESHOLD)
     n_true = truth.count()
     assert n_true >= 40, f"only {n_true} truth pairs - fixture too sparse"
 
 
-def test_scaled_profile_recall_at_least_090(sh):
+def test_scaled_profile_recall_at_least_090(hsf):
     """The production profile's contract: recall >= 0.9 at J >= 0.5."""
-    truth = exact_jaccard_truth(sh, JACCARD_THRESHOLD)
-    found = minhash_lsh_pairs(sh, SCALED_PERMS, SCALED_BANDS)
+    truth = exact_jaccard_truth(hsf, JACCARD_THRESHOLD)
+    found = minhash_lsh_pairs(hsf, SCALED_PERMS, SCALED_BANDS)
     n_true = truth.count()
     # found is exact-verified, hence a subset of truth: count is enough
     n_found = found.count()
@@ -69,13 +72,13 @@ def test_scaled_profile_recall_at_least_090(sh):
     assert recall >= 0.9, f"scaled profile recall {recall:.3f} < 0.9"
 
 
-def test_demo_profile_misses_threshold_pairs(sh):
+def test_demo_profile_misses_threshold_pairs(hsf):
     """The reason the scaled profile exists: on the same corpus the demo
     geometry (4 bands x 2 rows) must recall measurably less — if it
     didn't, the fixture would not be exercising the S-curve and the
     scaled assertion above would be vacuous."""
-    truth = exact_jaccard_truth(sh, JACCARD_THRESHOLD)
-    demo = minhash_lsh_pairs(sh, N_PERMS, N_BANDS)
+    truth = exact_jaccard_truth(hsf, JACCARD_THRESHOLD)
+    demo = minhash_lsh_pairs(hsf, N_PERMS, N_BANDS)
     n_true = truth.count()
     demo_recall = demo.count() / n_true
     assert demo_recall < 0.9, (
@@ -116,7 +119,7 @@ def test_incremental_index_scaled_profile_matches_one_shot(spark, sf_dir):
     assert got == expect and len(expect) > 0
 
 
-def test_candidate_precision_consistent_with_pair_output(sh):
+def test_candidate_precision_consistent_with_pair_output(hsf):
     """The precision gauge's n_verified must equal the pair query's
     output count for the same profile (one pipeline, one number), its
     candidate count can only exceed it, and precision stays in [0, 1].
@@ -126,8 +129,8 @@ def test_candidate_precision_consistent_with_pair_output(sh):
     from mapreduce_spark.operators.dedup import _candidate_precision
 
     for perms, bands in ((N_PERMS, N_BANDS), (SCALED_PERMS, SCALED_BANDS)):
-        row = _candidate_precision(sh, perms, bands).collect()[0]
-        n_pairs = minhash_lsh_pairs(sh, perms, bands).count()
+        row = _candidate_precision(hsf, perms, bands).collect()[0]
+        n_pairs = minhash_lsh_pairs(hsf, perms, bands).count()
         assert row.n_verified == n_pairs
         assert row.n_candidates >= row.n_verified
         assert 0.0 <= row.precision <= 1.0

@@ -18,8 +18,6 @@ import sys
 import pytest
 
 _SCRIPT = r"""
-import sys
-sys.path.insert(0, "/root/repo")
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 import pyspark.sql.functions as F

@@ -1,45 +1,85 @@
-"""Stored shingle-fingerprint pass (r13, guide §8): equivalence gates.
+"""Stored shingle-fingerprint pass: equivalence gates.
 
-The LSH trio now derives signatures AND both exact-verify sides from one
-materialized (doc_id, hs) int64 fingerprint table (_doc_shingle_hashes)
-instead of re-deriving string shingles per plan reference. These tests
-pin the two claims that make that value-preserving:
+Every set-similarity consumer derives signatures AND exact-verify sets
+from one materialized (doc_id, hs) int64 fingerprint table
+(_doc_shingle_hashes) instead of string shingles. These tests pin the
+two claims that make that value-preserving, and check the consumers
+against the string-semantics reference, their DuckDB oracles:
 
 1. bs = hs % P elementwise equals base_hashes(sgl) — so signatures and
-   band keys are bit-identical to the string-path derivation;
+   band keys are bit-identical to the string-shingle derivation;
 2. hash-set Jaccard equals string-set Jaccard (md5_long injectivity
-   over the corpus's distinct shingles — checked directly), so the
-   verified pair sets and their jaccard values are frame-identical.
+   over the corpus's distinct shingles — checked directly), so every
+   consumer's rows equal its string-shingle oracle's.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import pathlib
+
+import duckdb
 import pyspark.sql.functions as F
+import pytest
 
 from mapreduce_spark.functions.hashing import md5_long
 from mapreduce_spark.operators.dedup import (
-    N_BANDS,
-    N_PERMS,
-    OPH_ROWS_PER_BAND,
-    SCALED_BANDS,
-    SCALED_PERMS,
     _bs_from_hs,
     _doc_shingle_hashes,
     _doc_shingles,
-    _oph_sig_from_bs,
-    bands_from_sig,
     base_hashes,
-    fingerprint_lsh_pairs,
-    lsh_verified_pairs,
-    minhash_lsh_pairs,
-    minhash_sig_array_np,
-    oph_lsh_pairs,
-    sig_array_np_from_bs,
 )
+from mapreduce_spark.registry import get_oracles, get_queries
+
+# the queries that read the fingerprint pass instead of string shingles
+FINGERPRINT_CONSUMERS = [
+    "dedup_ngram_jaccard",
+    "dedup_recall_report",
+    "dedup_recall_report_scaled",
+    "dedup_recall_report_oph",
+    "minhash_signatures",
+    "dedup_precision_report",
+    "dedup_precision_report_scaled",
+    "minhash_band_stats",
+    "ngram_novelty",
+    "minhash_bbit_signatures",
+    "oph_signatures",
+    "dedup_allpairs_prefix",
+    "split_leakage_report",
+]
 
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+@pytest.fixture(scope="module", name="gate")
+def gate_fixture():
+    """tools/check_correctness.py, loaded by path (tools/ is not a
+    package): its canon/df_to_rows are the driver-compare canonical form."""
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_correctness.py"
+    spec = importlib.util.spec_from_file_location("check_correctness", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="module", name="duck")
+def duck_fixture(gate, sf_dir):
+    con = duckdb.connect()
+    for t in gate.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+def _against_oracle(spark, sf_dir, gate, duck, name):
+    """(spark rows, oracle rows), both in the gate's canonical form."""
+    sdf = get_queries()[name](spark, sf_dir)
+    got = gate.df_to_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+    rel = duck.execute(get_oracles()[name])
+    want = gate.df_to_rows([d[0] for d in rel.description], rel.fetchall())
+    return got, want
 
 
 def test_fingerprint_base_hashes_bit_identical(spark, sf_dir):
@@ -62,43 +102,26 @@ def test_md5_long_injective_over_corpus_shingles(spark, sf_dir):
     assert r["n"] == r["nh"], "md5_long collision inside the corpus"
 
 
-def test_fingerprint_trio_frames_match_string_path(spark, sf_dir):
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    hsf = _doc_shingle_hashes(spark, sf_dir)
-    cols = ["doc_a", "doc_b", "jaccard"]
+def test_fingerprint_trio_frames_match_string_path(spark, sf_dir, gate, duck):
+    """The LSH trio (demo k-perm, production k-perm on the Arrow
+    kernel, OPH) equals its string-shingle oracle row for row."""
+    for name in ("dedup_minhash_lsh", "dedup_minhash_lsh_scaled", "dedup_minhash_lsh_oph"):
+        got, want = _against_oracle(spark, sf_dir, gate, duck, name)
+        assert want[1], f"{name}: no near-dup pairs, the check proves nothing"
+        assert got == want, name
 
-    # demo profile
-    assert _rows(fingerprint_lsh_pairs(hsf, N_PERMS, N_BANDS), cols) == _rows(
-        minhash_lsh_pairs(sh, N_PERMS, N_BANDS), cols
-    )
-    # production k-perm profile (Arrow signature kernel)
-    assert _rows(
-        fingerprint_lsh_pairs(
-            hsf, SCALED_PERMS, SCALED_BANDS, sig_fn=sig_array_np_from_bs
-        ),
-        cols,
-    ) == _rows(
-        minhash_lsh_pairs(
-            sh, SCALED_PERMS, SCALED_BANDS, sig_fn=minhash_sig_array_np
-        ),
-        cols,
-    )
-    # OPH profile
-    oph_fp = lsh_verified_pairs(
-        hsf,
-        bands_from_sig(
-            _oph_sig_from_bs(_bs_from_hs(hsf)), SCALED_BANDS, OPH_ROWS_PER_BAND
-        ),
-        set_col="hs",
-    )
-    assert _rows(oph_fp, cols) == _rows(oph_lsh_pairs(sh), cols)
+
+@pytest.mark.parametrize("name", FINGERPRINT_CONSUMERS)
+def test_fingerprint_consumer_matches_string_oracle(spark, sf_dir, gate, duck, name):
+    got, want = _against_oracle(spark, sf_dir, gate, duck, name)
+    assert got == want, name
 
 
 def test_release_local_checkpoints_empties_executor_storage(spark, sf_dir):
-    """Artifact lifecycle (VERDICT r12 #8): after a materializing query
-    completes, release_local_checkpoints unpersists every tracked RDD,
-    so repeated invocations (bench reps) cannot accumulate executor
-    storage — the context's persistent-RDD map returns to empty."""
+    """Artifact lifecycle: after a materializing query completes,
+    release_local_checkpoints unpersists every tracked RDD, so repeated
+    invocations (bench reps) cannot accumulate executor storage — the
+    context's persistent-RDD map returns to empty."""
     from mapreduce_spark.operators.artifacts import release_local_checkpoints
 
     _doc_shingle_hashes(spark, sf_dir).count()  # materializes a checkpoint

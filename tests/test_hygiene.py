@@ -185,3 +185,20 @@ def test_style_gate_catches_seeded_violations():
     kinds2 = {v.split(": ", 1)[1] for v in style_violations(bad2, "seed2.py")}
     assert {"missing module docstring", "undocumented class",
             "mutable default argument", "bare except"} <= kinds2, kinds2
+
+
+def test_no_hard_coded_checkout_path():
+    """Relocatable checkout: the package, tests and tools find the tree
+    from their own location, never from an absolute path baked into the
+    source — a copy run elsewhere would otherwise silently import the
+    original tree. Flags this checkout's own path, and any sys.path
+    entry spelled as an absolute string literal."""
+    root = SRC.parent
+    abs_sys_path = re.compile(r"""sys\.path\.(?:insert|append)\([^)]*["']/""")
+    hits = []
+    for d in ("mapreduce_spark", "tests", "tools"):
+        for p in (root / d).rglob("*.py"):
+            for i, line in enumerate(p.read_text().splitlines(), 1):
+                if str(root) in line or abs_sys_path.search(line):
+                    hits.append(f"{p.relative_to(root)}:{i}")
+    assert not hits, hits

@@ -220,3 +220,16 @@ def test_training_stride_law():
     # |S| x K at 1e9: (1e9 / stride) x (1e9 / cm) ~ 64 x 1e9 — linear
     k = 10**9 // ivf_cent_mod(10**9)
     assert (10**9 // big) * k <= 80 * 10**9
+
+
+def test_eager_quantizer_is_checkpointed_when_knob_reads_zero(spark, monkeypatch):
+    """SPARK_GRAFT_NO_MATERIALIZE=0 means OFF under the one knob parser
+    (session.env_on): ivf_trained_hier(eager=True) must still return a
+    checkpoint-backed centroid table, not silently fall back to the
+    lazy plan as a plain truthiness check on '0' would."""
+    from mapreduce_spark.operators.similarity import ivf_trained_hier
+
+    monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "0")
+    cent_a, _ = ivf_trained_hier(_corpus(spark, 256), eager=True)
+    plan = cent_a._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LogicalRDD", plan.toString()

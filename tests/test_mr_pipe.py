@@ -102,7 +102,7 @@ def test_mr_submit_cli_reproduces_reference_golden(spark, tmp_path):
         import pytest
 
         pytest.skip("reference corpus not present")
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
     import mr_submit
 
     out_dir = str(tmp_path / "output")

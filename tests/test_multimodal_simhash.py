@@ -132,6 +132,7 @@ def test_crossmodal_verdict_off_diagonal_cells(spark):
         N_BANDS,
         N_PERMS,
         minhash_lsh_pairs,
+        shingle_fingerprints,
     )
     from mapreduce_spark.operators.multimodal import (
         crossmodal_verdict_frame,
@@ -174,13 +175,15 @@ def test_crossmodal_verdict_off_diagonal_cells(spark):
         ],
         "doc_id long, payload binary",
     )
-    sh = texts.select(
-        "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
-    ).filter(F.size("sgl") > 0)
+    hsf = shingle_fingerprints(
+        texts.select(
+            "doc_id", F.array_distinct(shingles(tokens("text"), 3)).alias("sgl")
+        )
+    )
     verdicts = {
         r.doc_id: r.verdict
         for r in crossmodal_verdict_frame(
-            minhash_lsh_pairs(sh, N_PERMS, N_BANDS),
+            minhash_lsh_pairs(hsf, N_PERMS, N_BANDS),
             payload_simhash_pairs(media),
         ).collect()
     }

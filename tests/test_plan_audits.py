@@ -489,14 +489,16 @@ def test_arrow_integer_kernels_stay_inside_scan_partitions(spark, sf_dir):
     mapInPandas, nothing shuffles before or inside the kernel."""
     from mapreduce_spark.operators.dedup import (
         SCALED_PERMS,
+        _bs_from_hs,
         _doc_shingles,
-        minhash_sig_array_np,
+        shingle_fingerprints,
+        sig_array_np_from_bs,
     )
     from mapreduce_spark.operators.similarity import lsh_buckets_np
     from mapreduce_spark.sources.tables import load_table
 
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sgl") > 0)
-    sig = minhash_sig_array_np(sh, SCALED_PERMS)
+    hsf = shingle_fingerprints(_doc_shingles(spark, sf_dir))
+    sig = sig_array_np_from_bs(_bs_from_hs(hsf), SCALED_PERMS)
     assert audit.exchange_count(sig) == 0, audit.simple_plan(sig)
     assert "InPandas" in audit.simple_plan(sig)
 

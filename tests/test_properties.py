@@ -327,7 +327,7 @@ def py_minhash_sig(sgl: list[str], n_perms: int) -> list[int]:
 def test_numpy_signature_fanout_matches_python_model(
     spark, monkeypatch, docs
 ):
-    """minhash_sig_array_np == the pure-python md5 model on generated
+    """sig_array_np_from_bs == the pure-python md5 model on generated
     shingle sets — with MH_NP_SLAB pinned to 2 so the slab-split min
     fold (the bounded-memory path a million-shingle document takes) is
     exercised on every example."""
@@ -340,6 +340,8 @@ def test_numpy_signature_fanout_matches_python_model(
     )
     got = {
         r["doc_id"]: list(r["sig"])
-        for r in dedup.minhash_sig_array_np(df, 7).collect()
+        for r in dedup.sig_array_np_from_bs(
+            dedup._bs_from_hs(dedup.shingle_fingerprints(df)), 7
+        ).collect()
     }
     assert got == {i: py_minhash_sig(sgl, 7) for i, sgl in enumerate(docs)}
